@@ -17,8 +17,8 @@ every row to the task that wrote it.
 
 Filesystem contract: the swap relies on atomic directory `rename` —
 POSIX/HDFS semantics. On S3-class object stores (no atomic rename) the
-swap maps onto a manifest pointer updated with a conditional PUT, as in
-`table.py`'s commit protocol (see its docstring).
+swap maps onto a manifest pointer updated with a conditional PUT
+(`If-None-Match: *`).
 
 Staleness guard: `get_or_compute` takes an optional `fingerprint`
 (e.g. a hash of the DedupConfig fields). It is stored in the stage meta;
@@ -36,11 +36,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from simages_spark.fsutil import newest_mtime
+
 
 # storage-layout knobs that cannot change a stage's OUTPUT — hashing
 # them into the fingerprint would mark every existing checkpoint stale
-# on a backend switch or a workdir move (silent full recompute)
-_STORAGE_KNOBS = {"checkpoint_dir", "checkpoint_backend"}
+# on a workdir move (silent full recompute)
+_STORAGE_KNOBS = {"checkpoint_dir"}
 
 # execution-only knobs with the same contract: provably output-neutral
 # (shuffle_partitions is pure parallelism; cc_checkpoint_every is the CC
@@ -105,10 +107,10 @@ def config_fingerprint(cfg, stage: str | None = None) -> str:
     reproduce, so their first resume after upgrading recomputes once
     (the stale-checkpoint path, loud in the stage metrics' run_id).
     The alternative — keeping storage knobs in the hash — silently
-    invalidates every checkpoint on every workdir move or backend
-    switch, forever; one visible recompute at upgrade is the cheaper
-    contract. The same one-visible-recompute applies when a stage first
-    moves from whole-config to per-stage fingerprints."""
+    invalidates every checkpoint on every workdir move, forever; one
+    visible recompute at upgrade is the cheaper contract. The same
+    one-visible-recompute applies when a stage first moves from
+    whole-config to per-stage fingerprints."""
     neutral = _STAGE_NEUTRAL_KNOBS.get(stage, set()) if stage else set()
     items = sorted(
         (k, repr(v))
@@ -119,9 +121,6 @@ def config_fingerprint(cfg, stage: str | None = None) -> str:
         and k not in neutral
     )
     return hashlib.sha256(json.dumps(items).encode()).hexdigest()[:16]
-
-
-from simages_spark.table import _newest_mtime  # shared liveness signal
 
 
 def _check_fingerprint(name: str, stored, expected: str) -> None:
@@ -152,26 +151,18 @@ def _footer_rows_and_files(path: str) -> tuple[int, int]:
     return rows, files
 
 
-def _assert_backend_layout(root: str, name: str, backend: str) -> None:
-    """The two backends share the per-stage path `root/<name>` with
-    incompatible layouts; opening a stage written by the OTHER backend
-    must be a clear error, not a parquet 'conflicting directory
-    structures' crash (dirs reading table) or a silent
-    'stage not found' recompute (table reading dirs)."""
+def _assert_not_table_layout(root: str, name: str) -> None:
+    """Refuse a stage directory holding SnapshotTable manifests: such a
+    workdir was written by the removed `table` checkpoint backend, and
+    treating it as a stage dir would crash the parquet read or — in
+    `write` — rename it away and rmtree its version history silently."""
     import glob as _glob
 
     stage = os.path.join(root, name)
-    if backend == "table" and os.path.exists(stage + ".meta.json"):
+    if _glob.glob(os.path.join(stage, "v*.manifest.json")):
         raise ValueError(
             f"checkpoint stage '{name}' under {root} was written by the "
-            f"'dirs' backend — keep --checkpoint-backend dirs for this "
-            f"workdir, or use a fresh workdir for the table backend"
-        )
-    if backend == "dirs" and _glob.glob(os.path.join(stage, "v*.manifest.json")):
-        raise ValueError(
-            f"checkpoint stage '{name}' under {root} was written by the "
-            f"'table' backend — keep --checkpoint-backend table for this "
-            f"workdir, or use a fresh workdir for the dirs backend"
+            f"removed 'table' checkpoint backend — use a fresh workdir"
         )
 
 
@@ -188,7 +179,7 @@ class CheckpointStore:
         return os.path.join(self.root, f"{name}.meta.json")
 
     def exists(self, name: str) -> bool:
-        _assert_backend_layout(self.root, name, "dirs")
+        _assert_not_table_layout(self.root, name)
         # both the meta AND the data dir: a crash in the swap window can
         # leave a stale meta pointing at a missing/renamed-away data dir —
         # treat that as "stage absent" (recompute), never as corruption
@@ -220,7 +211,7 @@ class CheckpointStore:
                 # files under _temporary/ while the dir's own mtime stays
                 # at job start — judging age by the top level would sweep
                 # a live >1h write mid-job
-                if now - _newest_mtime(d) < min_age_s:
+                if now - newest_mtime(d) < min_age_s:
                     continue
             except OSError:
                 continue  # already gone (concurrent sweep)
@@ -249,12 +240,12 @@ class CheckpointStore:
         by the old run's meta/fingerprint, and never a half-replaced
         directory (round-2 verdict item 7). Two concurrent writers of the
         same stage: one wins, the loser fails with a clear error and its
-        tmp output removed (the table backend serializes instead — use it
-        when same-stage concurrent writers are expected)."""
+        tmp output removed."""
         # the guard matters MOST here: this path renames-away and
-        # rmtree's whatever sits at root/<name> — on a table-backend
-        # stage that would destroy its entire version history silently
-        _assert_backend_layout(self.root, name, "dirs")
+        # rmtree's whatever sits at root/<name> — on a stage written by
+        # the removed table backend that would destroy its entire
+        # version history silently
+        _assert_not_table_layout(self.root, name)
         import shutil
 
         # uuid suffix: second-granularity timestamps collide when two
@@ -273,8 +264,10 @@ class CheckpointStore:
         # rows from footers, partitions from the file count — no count()
         # job and no distinct() shuffle; sealed BEFORE any swap so the
         # published meta always describes exactly this run's data (file
-        # count == producing-partition count for the default write; see
-        # TableCheckpointStore.write for the honest caveat)
+        # count == producing-partition count for the default write, one
+        # task = one file; empty tasks' schema-only files or a
+        # maxRecordsPerFile split make it an upper bound, while the exact
+        # per-row lineage stays in the part_id column itself)
         rows, n_files = _footer_rows_and_files(tmp)
         meta = {
             "name": name,
@@ -346,8 +339,7 @@ class CheckpointStore:
                     f"checkpoint stage '{name}': a concurrent writer "
                     f"swapped the stage mid-commit (lost the rename race) "
                     f"— this writer's output was discarded; re-read the "
-                    f"stage or use the 'table' backend, which serializes "
-                    f"same-stage writers"
+                    f"stage"
                 ) from e
             raise RuntimeError(
                 f"checkpoint stage '{name}': filesystem error during the "
@@ -395,160 +387,3 @@ class CheckpointStore:
             if fingerprint is None or stored == fingerprint:
                 return self.read(name)
         return self.write(name, compute(), run_id=run_id, fingerprint=fingerprint)
-
-
-class TableCheckpointStore:
-    """Checkpoint stages as versions of an ACID `SnapshotTable` — the
-    lakehouse-shaped backend the module docstring promises (north_rule:
-    "checkpoints per-partition signature and edge state to Iceberg ...
-    resumes with full lineage and metrics").
-
-    Layout: one SnapshotTable per stage at `<root>/<name>/`. Each write
-    is a new table VERSION whose manifest carries the stage metrics
-    (run_id, fingerprint, rows, per-partition lineage) as commit
-    properties — the same shape as Iceberg snapshot summary properties,
-    so on a real catalog this maps 1:1 onto `table.snapshots()`.
-
-    What this buys over the directory store (same interface):
-      * the commit point is ONE atomic+exclusive hardlink — there is no
-        two-rename window that can leave "no stage at all" (the dir
-        store's one documented crash caveat);
-      * every rerun of a stage is preserved as history: `history(name)`
-        is the stage's full lineage, `read(name, version=...)` time-
-        travels to any prior run's output, and a config-fingerprint
-        change is an auditable new version instead of an in-place swap;
-      * concurrent writers of the same stage serialize through optimistic
-        commits instead of last-rename-wins.
-
-    Metrics are computed from the staged files BEFORE the commit is
-    published, so a version's manifest always describes exactly the data
-    it references (never a post-hoc sidecar that can diverge).
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def _table(self, name: str):
-        from simages_spark.table import SnapshotTable
-
-        _assert_backend_layout(self.root, name, "table")
-        return SnapshotTable(self.spark, os.path.join(self.root, name))
-
-    def exists(self, name: str) -> bool:
-        _assert_backend_layout(self.root, name, "table")
-        if not os.path.isdir(os.path.join(self.root, name)):
-            return False
-        return self._table(name).current_version() is not None
-
-    def write(
-        self,
-        name: str,
-        df: DataFrame,
-        run_id: str | None = None,
-        fingerprint: str | None = None,
-    ) -> DataFrame:
-        run_id = run_id or f"run-{int(time.time())}-{uuid.uuid4().hex[:8]}"
-        t = self._table(name)
-        with_lineage = df.withColumn("part_id", F.spark_partition_id()).withColumn(
-            "stage_run_id", F.lit(run_id)
-        )
-        # stage first, derive the metrics from the staged bytes, then
-        # commit a manifest that carries them — one Spark write total
-        gid, gstats = t._stage_group_with_stats(with_lineage)
-        staged = self.spark.read.parquet(t._group_path(gid))
-        schema = staged.schema.simpleString()
-        # rows from the footer stats, partitions from the file count —
-        # ZERO extra Spark jobs; the staged bytes were scanned exactly
-        # once, by the write itself. Caveat recorded honestly: file
-        # count equals producing-partition count for the default write
-        # (one task = one file); empty tasks' schema-only files or a
-        # maxRecordsPerFile split make it an upper bound, while the
-        # exact per-row lineage stays in the part_id column itself
-        n_files = sum(
-            1
-            for f in os.listdir(t._group_path(gid))
-            if f.endswith(".parquet")
-        )
-        props = {
-            "name": name,
-            "run_id": run_id,
-            "fingerprint": fingerprint,
-            "rows": gstats["rows"],
-            "partitions": n_files,
-            "written_at_unix": time.time(),
-            "schema": schema,
-        }
-        try:
-            t._commit_with_retry(
-                lambda base: ([gid], {gid: gstats}, schema),
-                "checkpoint",
-                props=props,
-            )
-        except Exception:
-            # never-referenced staged group — reclaim the full stage
-            # output now (nothing vacuums checkpoint tables automatically)
-            import shutil
-
-            shutil.rmtree(t._group_path(gid), ignore_errors=True)
-            raise
-        return staged.drop("part_id", "stage_run_id")
-
-    def read(
-        self,
-        name: str,
-        version: int | None = None,
-        expected_fingerprint: str | None = None,
-    ) -> DataFrame:
-        if not self.exists(name):
-            raise FileNotFoundError(
-                f"checkpoint stage '{name}' not found under {self.root} — "
-                f"run the producing stage first"
-            )
-        if expected_fingerprint is not None:
-            _check_fingerprint(
-                name,
-                self.metrics(name, version).get("fingerprint"),
-                expected_fingerprint,
-            )
-        return self._table(name).read(version).drop("part_id", "stage_run_id")
-
-    def metrics(self, name: str, version: int | None = None) -> dict:
-        t = self._table(name)
-        v = t.current_version() if version is None else version
-        return t.manifest(v).get("props") or {}
-
-    def history(self, name: str) -> list[dict]:
-        """Full stage lineage: every run's commit properties, oldest
-        first — the audit trail a directory swap discards."""
-        t = self._table(name)
-        return [
-            {"version": m["version"], **(m.get("props") or {})}
-            for m in t.history()
-        ]
-
-    def get_or_compute(
-        self,
-        name: str,
-        compute,
-        run_id: str | None = None,
-        fingerprint: str | None = None,
-    ) -> DataFrame:
-        if self.exists(name):
-            stored = self.metrics(name).get("fingerprint")
-            if fingerprint is None or stored == fingerprint:
-                return self.read(name)
-        return self.write(name, compute(), run_id=run_id, fingerprint=fingerprint)
-
-
-def make_checkpoint_store(
-    spark: SparkSession, root: str, backend: str = "dirs"
-):
-    """Factory: `dirs` = parquet directory swaps (default, zero deps),
-    `table` = SnapshotTable-versioned stages with commit-time lineage."""
-    if backend == "table":
-        return TableCheckpointStore(spark, root)
-    if backend == "dirs":
-        return CheckpointStore(spark, root)
-    raise ValueError(f"unknown checkpoint backend {backend!r}")

@@ -23,11 +23,11 @@ into one compacted generation (simages_spark/maintenance.py).
 `compact --crawl-tables <root>` is its twin for the TABLE-backed crawl
 stores (stream_near_dedup_to_tables): SnapshotTable.compact() on each.
 
-`--checkpoint-backend table` checkpoints every stage as a version of an
-ACID SnapshotTable instead of a directory swap: single-hardlink atomic
-commits, the full run history per stage, and stage time travel
-(checkpoint.TableCheckpointStore). The --py-files artifact itself is
-built by tools/make_pyfiles_zip.py (deterministic bytes).
+Every stage checkpoints into `--workdir` through checkpoint.CheckpointStore
+(snapshot-atomic directory swaps with per-row lineage and config
+fingerprints); `apply-policy --table-root` writes the deduplicated corpus
+as an ACID SnapshotTable. The --py-files artifact itself is built by
+tools/make_pyfiles_zip.py (deterministic bytes).
 """
 
 from __future__ import annotations
@@ -39,8 +39,9 @@ import sys
 
 from pyspark.sql import functions as F
 
-from simages_spark.checkpoint import config_fingerprint, make_checkpoint_store
+from simages_spark.checkpoint import CheckpointStore, config_fingerprint
 from simages_spark.config import DedupConfig
+from simages_spark.fsutil import newest_mtime
 from simages_spark.functions.signatures import compute_signatures, signature_metrics
 from simages_spark.operators.connected_components import connected_components
 from simages_spark.operators.groups import (
@@ -178,12 +179,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--history", action="store_true",
                     help="table: print the snapshot history")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--checkpoint-backend", choices=["dirs", "table"],
-                    default="dirs",
-                    help="'table' checkpoints each stage as a version of "
-                         "an ACID SnapshotTable: atomic single-hardlink "
-                         "commits, full per-stage run history, and stage "
-                         "time travel (checkpoint.TableCheckpointStore)")
     args = ap.parse_args(argv)
 
     if args.command == "table":
@@ -344,15 +339,14 @@ def main(argv: list[str] | None = None) -> int:
         spark.stop()
         return 0
     cfg = DedupConfig(jaccard_threshold=args.threshold, checkpoint_dir=args.workdir,
-                      exact_first=not args.all_pairs_edges,
-                      checkpoint_backend=args.checkpoint_backend)
+                      exact_first=not args.all_pairs_edges)
     # per-stage fingerprints: each stage hashes only the knobs that can
     # change ITS output, and every cross-stage READ passes the expected
     # fingerprint — `cluster` after a config change refuses stale
     # signatures/candidates instead of silently mixing configs
     stage_fp = lambda stage: config_fingerprint(cfg, stage=stage)  # noqa: E731
     store = (
-        make_checkpoint_store(spark, args.workdir, args.checkpoint_backend)
+        CheckpointStore(spark, args.workdir)
         if args.workdir
         else None  # `show` takes no workdir
     )
@@ -514,8 +508,6 @@ def main(argv: list[str] | None = None) -> int:
         }))
     elif args.command == "curate":
         from simages_spark.operators.curation import curation_stages
-        from simages_spark.table import _newest_mtime
-
         if not args.benchmark:
             ap.error("curate requires --benchmark")
         bench = _load_docs(spark, args.benchmark)
@@ -525,7 +517,7 @@ def main(argv: list[str] | None = None) -> int:
         clusters = store.read(
             "clusters", expected_fingerprint=stage_fp("clusters")
         )
-        bench_id = f"{args.benchmark}@{_newest_mtime(args.benchmark):.6f}"
+        bench_id = f"{args.benchmark}@{newest_mtime(args.benchmark):.6f}"
         fp = (
             f"{stage_fp('clusters')},words={args.segment_words},"
             f"contamination={args.contamination_max},benchmark={bench_id}"
@@ -604,9 +596,7 @@ def main(argv: list[str] | None = None) -> int:
         # (newest mtime under the path) join the fingerprint: a changed
         # benchmark, even overwritten in place at the same path, is a
         # different stage output and forces a recompute
-        from simages_spark.table import _newest_mtime
-
-        bench_id = f"{args.benchmark}@{_newest_mtime(args.benchmark):.6f}"
+        bench_id = f"{args.benchmark}@{newest_mtime(args.benchmark):.6f}"
         report = store.get_or_compute(
             "decontamination",
             lambda: decontamination_report(

@@ -55,10 +55,6 @@ class DedupConfig:
     # --- checkpointing (analog of the .npy signature cache,
     #     reference: src/simages/extractor.py:179-189) ---
     checkpoint_dir: str | None = None
-    # 'dirs' = parquet directory swaps; 'table' = each stage is a version
-    # of an ACID SnapshotTable (atomic hardlink commits, per-stage run
-    # history + time travel — checkpoint.TableCheckpointStore)
-    checkpoint_backend: str = "dirs"
     # lineage-cut cadence in CC rounds. 1 = every round (measured best:
     # one LS+SS round is already ~6 shuffles deep and uncut Catalyst
     # re-analysis grows superlinearly); raise to trade analysis depth for
@@ -71,9 +67,11 @@ class DedupConfig:
     # Crossover measured in round 6 on a realistic dedup-shaped graph
     # (300k edges / 417k nodes, clean-steal reps): driver union-find
     # ~2.0 s vs ~4.4-5.7 s distributed, identical labels — the driver
-    # path stays cheaper until well past 1M edges, and 1M keeps the
-    # collect (16 MB) and the transient Python dicts (~150 MB) far from
-    # any driver-memory concern at the 24g default. Every genuinely
+    # path stays cheaper until well past 1M edges. At 1M the fast path
+    # costs the driver a 16 MB collect plus ~150 MB of transient Python
+    # dicts: small beside the default heap (half the host's memory, at
+    # least 1g — session.default_driver_memory), but a deployment with a
+    # tight driver budget should lower this bound. Every genuinely
     # large graph still takes the distributed rounds (asserted by the
     # 20M-edge soaks); the label-equality gate
     # (test_fast_path_equals_distributed_random_graph) pins identity.

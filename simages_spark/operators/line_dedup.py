@@ -108,11 +108,20 @@ def segment_keepers(occurrences: DataFrame) -> DataFrame:
     map-side partial agg still collapses hot boilerplate keys — now
     without the sorts. Equality with the struct-min form is pinned by
     tests/test_line_dedup.py over full-range doc_ids.
+
+    Precondition: 0 ≤ pos < 2^31 (posexplode positions always are). A
+    pos outside it would spill into the doc_id digits of the key and
+    elect or decode the wrong keeper, so it fails the job instead.
     """
     two63, mul = F.expr(_ENC_TWO63), F.expr(_ENC_MUL)
+    pos = F.col("pos")
+    checked_pos = F.when(
+        (pos < 0) | (pos >= F.lit(2**31)),
+        F.raise_error(F.lit("segment_keepers: pos must be in [0, 2^31)")),
+    ).otherwise(pos)
     enc = (
         F.col("doc_id").cast("decimal(38,0)") + two63
-    ) * mul + F.col("pos").cast("decimal(38,0)")
+    ) * mul + checked_pos.cast("decimal(38,0)")
     w_pos = F.col("_e") % mul
     return occurrences.groupBy("seg_key").agg(F.min(enc).alias("_e")).select(
         "seg_key",

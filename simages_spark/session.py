@@ -17,20 +17,71 @@ def _local_dir() -> str:
     return "/tmp"
 
 
+_GIB = 1 << 30
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: the smaller of the cgroup limit (v2
+    `memory.max`, else v1 `memory.limit_in_bytes`; absent or "max" = no
+    limit) and the kernel's MemAvailable estimate."""
+    limits = []
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+        break
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    return min(limits) if limits else 2 * _GIB
+
+
+def default_driver_memory() -> str:
+    """Half of the host's usable memory for the driver heap, kept within
+    [1g, 24g]: local mode is driver-only, so the one JVM gets real
+    memory, while the other half stays for its off-heap use and the
+    Python workers. A fixed default larger than the host aborts the JVM
+    at launch (the -Xms pin below reserves the whole heap up front)."""
+    mib = min(max(host_memory_bytes() // 2, _GIB), 24 * _GIB) >> 20
+    return f"{mib}m"
+
+
+def default_cores() -> int:
+    """CPUs this process may run on (affinity mask, not the machine's
+    count)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without affinity masks
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "simages_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or default_cores())
     shuffle_partitions = shuffle_partitions or cores
     # resolve driver memory ONCE, honoring an extra_conf override: the
     # -Xms below must track whatever spark.driver.memory ends up being —
     # a pinned -Xms24g with an overridden -Xmx4g aborts the JVM at launch
     # ("Initial heap size set to a larger value than the maximum")
     driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
     )
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -42,14 +93,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (Spark's legacy parquet timestamp encoding) carries NO
         # footer min/max statistics, which blinds every stats-pruned path
-        # (SnapshotTable.scan/delete_where) on timestamp columns like
+        # (SnapshotTable.scan, delete_matching) on timestamp columns like
         # warc_ts; TIMESTAMP_MICROS is the modern type, matches Spark's
         # internal precision exactly, and gets stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode = driver-only: give the one JVM real memory (the box
-        # has 128 GiB); a small heap makes cache+execution churn/GC the
-        # bottleneck long before CPU
+        # local mode = driver-only: give the one JVM real memory (sized
+        # from the host by default_driver_memory); a small heap makes
+        # cache+execution churn/GC the bottleneck long before CPU
         .config("spark.driver.memory", driver_mem)
         # this sandbox's virtio disk has ~50ms file-metadata latency; the
         # bypass shuffle writer opens R files per map task and spends 10×

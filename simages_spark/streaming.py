@@ -145,8 +145,8 @@ def stream_signatures_to_table(
     its stream batch id (`append_exactly_once`), so the signature state
     lands in the versioned table with full per-batch lineage — the
     north rule's "checkpoints per-partition signature state to Iceberg"
-    for the STREAMING path (TableCheckpointStore covers the batch
-    stages).
+    for the STREAMING path (the batch stages checkpoint through
+    checkpoint.CheckpointStore).
 
     Exactly-once end to end: foreachBatch is at-least-once on retry, but
     a replayed batch id is ≤ the table's recorded high-water mark for

@@ -156,21 +156,37 @@ def test_per_stage_fingerprints_scope_invalidation(spark, tmp_path):
     assert config_fingerprint(base) != config_fingerprint(thresh)
 
 
+def test_default_config_fingerprints_pinned():
+    """The fingerprints of the default config are the resume contract:
+    a stage stored under one of these hashes must keep resuming as a
+    checkpoint hit. Removing a storage-only field (an excluded
+    `_STORAGE_KNOBS` member) must leave them byte-identical."""
+    from simages_spark.checkpoint import _STAGE_NEUTRAL_KNOBS, config_fingerprint
+    from simages_spark.config import DedupConfig
+
+    pinned = {
+        None: "a47e0e578d245596",
+        "signatures": "f07a91e4df36a0fb",
+        "sig_index": "e1cf0e4015ec08e5",
+        "candidates": "24ae8e8536be97e6",
+        "edges": "6f59ac367baf44ae",
+        "clusters": "a47e0e578d245596",
+    }
+    assert set(pinned) == {None, *_STAGE_NEUTRAL_KNOBS}
+    cfg = DedupConfig()
+    assert {st: config_fingerprint(cfg, st) for st in pinned} == pinned
+
+
 def test_read_refuses_cross_config_stage(spark, tmp_path):
     """Consumer-side staleness guard: read(expected_fingerprint=...) must
-    refuse a stage computed under other knobs (both backends) — the CLI
-    `cluster` command must not silently mix configs across stages."""
-    from simages_spark.checkpoint import make_checkpoint_store
-
+    refuse a stage computed under other knobs — the CLI `cluster` command
+    must not silently mix configs across stages."""
     df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-    for backend in ("dirs", "table"):
-        store = make_checkpoint_store(
-            spark, str(tmp_path / f"wd_{backend}"), backend
-        )
-        store.write("signatures", df, fingerprint="fpA")
-        assert store.read("signatures", expected_fingerprint="fpA").count() == 1
-        with pytest.raises(ValueError, match="different\\s+config"):
-            store.read("signatures", expected_fingerprint="fpB")
+    store = CheckpointStore(spark, str(tmp_path / "wd"))
+    store.write("signatures", df, fingerprint="fpA")
+    assert store.read("signatures", expected_fingerprint="fpA").count() == 1
+    with pytest.raises(ValueError, match="different\\s+config"):
+        store.read("signatures", expected_fingerprint="fpB")
 
 
 def test_sweep_removes_stale_rollback_meta(spark, tmp_path):

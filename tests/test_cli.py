@@ -123,70 +123,6 @@ def test_probe_flow_with_checkpointed_index(spark, docs_sf0001, tmp_path):
     )  # every re-crawled doc matches the store
 
 
-def test_table_checkpoint_backend(spark, docs_sf0001, tmp_path):
-    """TableCheckpointStore: same stagewise flow as the dirs backend, plus
-    what the table form adds — per-stage version history (lineage of
-    reruns), stage time travel, and commit-time metrics."""
-    from simages_spark.checkpoint import (
-        config_fingerprint,
-        make_checkpoint_store,
-    )
-
-    store = make_checkpoint_store(spark, str(tmp_path / "twd"), "table")
-    fp = config_fingerprint(CFG)
-
-    sig = store.get_or_compute(
-        "signatures",
-        lambda: compute_signatures(representative_docs(docs_sf0001), CFG),
-        fingerprint=fp,
-    )
-    n_sig = sig.count()
-    assert store.exists("signatures")
-    meta = store.metrics("signatures")
-    assert meta["rows"] == n_sig and meta["fingerprint"] == fp
-    assert meta["partitions"] >= 1  # per-partition lineage recorded
-    # lineage columns stored but not surfaced
-    assert "part_id" not in sig.columns and "stage_run_id" not in sig.columns
-
-    # resume-skip: compute must not run again under the same fingerprint
-    sig2 = store.get_or_compute("signatures", lambda: 1 / 0, fingerprint=fp)
-    assert sig2.count() == n_sig
-    assert len(store.history("signatures")) == 1
-
-    # a config change is a NEW VERSION, and the old run stays readable
-    cfg2 = DedupConfig(jaccard_threshold=0.9)
-    store.get_or_compute(
-        "signatures",
-        lambda: compute_signatures(representative_docs(docs_sf0001), cfg2),
-        fingerprint=config_fingerprint(cfg2),
-    )
-    hist = store.history("signatures")
-    assert len(hist) == 2 and hist[0]["fingerprint"] == fp
-    assert store.read("signatures", version=0).count() == n_sig  # time travel
-    assert store.metrics("signatures", version=0)["fingerprint"] == fp
-
-    # downstream stages flow identically to the dirs backend
-    cand = store.get_or_compute(
-        "candidates", lambda: build_candidates(docs_sf0001, sig, CFG)
-    )
-    edges = store.get_or_compute(
-        "edges", lambda: build_edges(cand, sig, docs_sf0001, CFG)
-    )
-    clusters = store.get_or_compute(
-        "clusters", lambda: connected_components(edges, CFG)
-    )
-    assert clusters.count() > 0
-
-    # both backends produce identical stage rows on the same input
-    dstore = make_checkpoint_store(spark, str(tmp_path / "dwd"), "dirs")
-    dsig = dstore.get_or_compute(
-        "signatures",
-        lambda: compute_signatures(representative_docs(docs_sf0001), CFG),
-        fingerprint=fp,
-    )
-    assert dsig.exceptAll(store.read("signatures", version=0)).count() == 0
-
-
 def test_schema_columns_parser():
     """Depth-aware top-level field extraction — 'id' must not match
     'batch_id', nested names must not count."""
@@ -212,34 +148,31 @@ def test_cli_compact_crawl_tables_missing_root_errors(tmp_path):
     assert not (tmp_path / "nope").exists()  # nothing fabricated
 
 
-def test_checkpoint_backend_layout_guard(spark, tmp_path):
-    """A stage written by one backend must be a clear error from the
-    other — not a parquet layout crash or a silent recompute."""
+def test_checkpoint_refuses_table_backend_layout(spark, tmp_path):
+    """A stage directory written by the removed `table` checkpoint
+    backend (a SnapshotTable per stage) must be a clear error — not a
+    parquet layout crash, and never renamed away by a write."""
     import pytest
 
-    from simages_spark.checkpoint import (
-        CheckpointStore,
-        TableCheckpointStore,
-        config_fingerprint,
-    )
+    from simages_spark.checkpoint import config_fingerprint
+    from simages_spark.table import SnapshotTable
 
-    wd = str(tmp_path / "wd")
+    wd = tmp_path / "wd"
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    CheckpointStore(spark, wd).write("sig", df)
-    with pytest.raises(ValueError, match="'dirs' backend"):
-        TableCheckpointStore(spark, wd).exists("sig")
+    SnapshotTable(spark, str(wd / "sig")).append(df)
+    store = CheckpointStore(spark, str(wd))
+    with pytest.raises(ValueError, match="removed 'table' checkpoint backend"):
+        store.exists("sig")
+    with pytest.raises(ValueError, match="removed 'table' checkpoint backend"):
+        store.write("sig", df)
+    assert SnapshotTable(spark, str(wd / "sig")).read().count() == 1
 
-    wd2 = str(tmp_path / "wd2")
-    TableCheckpointStore(spark, wd2).write("sig", df)
-    with pytest.raises(ValueError, match="'table' backend"):
-        CheckpointStore(spark, wd2).exists("sig")
-
-    # storage knobs must NOT invalidate fingerprints: flipping the
-    # backend or moving the workdir is not a semantic config change
+    # storage knobs must NOT invalidate fingerprints: moving the workdir
+    # is not a semantic config change
     from simages_spark.config import DedupConfig
 
-    a = DedupConfig(checkpoint_dir="/x", checkpoint_backend="dirs")
-    b = DedupConfig(checkpoint_dir="/y", checkpoint_backend="table")
+    a = DedupConfig(checkpoint_dir="/x")
+    b = DedupConfig(checkpoint_dir="/y")
     assert config_fingerprint(a) == config_fingerprint(b)
     assert config_fingerprint(a) != config_fingerprint(
         DedupConfig(jaccard_threshold=0.7)

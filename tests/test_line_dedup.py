@@ -175,3 +175,19 @@ def test_segment_keepers_decimal_encoding_equals_struct_min(spark):
     assert sorted(map(tuple, ref.collect())) == sorted(
         map(tuple, got.collect())
     )
+
+
+def test_segment_keepers_rejects_out_of_range_pos(spark):
+    """pos ≥ 2^31 (or < 0) would spill into the doc_id digits of the
+    decimal election key and elect the wrong keeper — it must fail
+    loudly, not answer."""
+    import pytest
+
+    from simages_spark.operators.line_dedup import segment_keepers
+
+    for pos in (2**31, -1):
+        occ = spark.createDataFrame(
+            [("k", 1, 0), ("k", 2, pos)], "seg_key string, doc_id long, pos long"
+        )
+        with pytest.raises(Exception, match=r"pos must be in \[0, 2\^31\)"):
+            segment_keepers(occ).collect()

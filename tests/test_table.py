@@ -18,6 +18,10 @@ def _df(spark, ids, tag="a"):
     )
 
 
+def _keys(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+
 def test_append_read_time_travel(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t1"))
     assert t.current_version() is None
@@ -36,7 +40,7 @@ def test_delete_rewrites_only_affected_groups(spark, tmp_path):
     t.append(_df(spark, range(10)))          # group A: 0-9
     t.append(_df(spark, range(100, 110)))    # group B: 100-109
     before = t.manifest(t.current_version())["data_groups"]
-    t.delete_where(F.col("doc_id") < 3)
+    t.delete_matching(_keys(spark, [0, 1, 2]), "doc_id")
     after = t.manifest(t.current_version())["data_groups"]
     # group B (no matching rows) carried by REFERENCE, group A rewritten
     assert before[1] in after and before[0] not in after
@@ -112,7 +116,7 @@ def test_vacuum_sweeps_only_orphans(spark, tmp_path):
     assert t.vacuum(min_age_s=0) == 1
     assert t.read().count() == 3
     # historical versions keep their groups through later deletes + vacuum
-    t.delete_where(F.col("doc_id") == 0)
+    t.delete_matching(_keys(spark, [0]), "doc_id")
     assert t.vacuum(min_age_s=0) == 0
     assert t.read(version=0).count() == 3
 
@@ -137,23 +141,6 @@ def test_vacuum_grace_preserves_inflight_commit(spark, tmp_path):
     )
     assert {r["doc_id"] for r in t.read().collect()} == {0, 1, 2, 7}
     assert t.vacuum(min_age_s=0) == 0  # nothing orphaned
-
-
-def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
-    """ADVICE medium: DELETE WHERE removes rows where the predicate is
-    TRUE; NULL-predicate rows must SURVIVE, and identically whether their
-    group was rewritten or carried by reference."""
-    t = SnapshotTable(spark, str(tmp_path / "t6c"))
-    df = spark.createDataFrame(
-        [(0, "a"), (1, None), (2, "delete-me")], "doc_id long, text string"
-    )
-    t.append(df)  # group with a TRUE match AND a NULL row → rewritten
-    t.append(
-        spark.createDataFrame([(3, None)], "doc_id long, text string")
-    )  # group with only a NULL row → no TRUE match, carried by reference
-    t.delete_where(F.col("text") == "delete-me")
-    got = {r["doc_id"] for r in t.read().collect()}
-    assert got == {0, 1, 3}  # both NULL rows kept
 
 
 def test_upsert_rejects_schema_mismatch(spark, tmp_path):
@@ -298,14 +285,14 @@ def test_compact_replans_when_source_rewritten(spark, tmp_path):
     orig = t._try_commit
     fired = {"n": 0}
 
-    def hook(base, groups, stats, op, schema, props=None, **kw):
+    def hook(base, groups, stats, op, schema, **kw):
         if op == "compact" and fired["n"] == 0:
             fired["n"] += 1
             # another writer deletes rows from a compaction source group
             SnapshotTable(spark, root).delete_matching(
                 spark.createDataFrame([(5,), (7,)], "doc_id long"), "doc_id"
             )
-        return orig(base, groups, stats, op, schema, props, **kw)
+        return orig(base, groups, stats, op, schema, **kw)
 
     t._try_commit = hook
     out = t.compact(target_rows=1000)
@@ -325,11 +312,11 @@ def test_compact_carries_concurrent_append(spark, tmp_path):
     orig = t._try_commit
     fired = {"n": 0}
 
-    def hook(base, groups, stats, op, schema, props=None, **kw):
+    def hook(base, groups, stats, op, schema, **kw):
         if op == "compact" and fired["n"] == 0:
             fired["n"] += 1
             SnapshotTable(spark, root).append(_df(spark, range(500, 510)))
-        return orig(base, groups, stats, op, schema, props, **kw)
+        return orig(base, groups, stats, op, schema, **kw)
 
     t._try_commit = hook
     out = t.compact(target_rows=1000)
@@ -547,7 +534,7 @@ def test_schema_evolution_additive(spark, tmp_path):
     row = {r["doc_id"]: r for r in t.read().collect()}[20]
     assert row["text"] is None and row["lang"] == "fr"
     # row-level delete over mixed-schema groups keeps the union schema
-    t.delete_where(F.col("doc_id") == 11)
+    t.delete_matching(_keys(spark, [11]), "doc_id")
     assert t.read().schema.names == ["doc_id", "text", "lang"]
     assert {r["doc_id"] for r in t.read().collect()} == {0, 1, 2, 10, 20}
     # compaction folds mixed-schema groups without dropping the column
@@ -696,49 +683,8 @@ def test_vacuum_sweeps_orphan_tmp_manifests(spark, tmp_path):
     assert t.read().count() == 1  # live manifest untouched
 
 
-def test_delete_where_stats_bound_probe(spark, tmp_path):
-    """delete_where decomposes `col <op> literal` conjuncts and probes
-    ONLY the groups whose manifest stats intersect (round-4 verdict weak
-    #1: the probe I/O must not be the full table for simple predicates)."""
-    t = SnapshotTable(spark, str(tmp_path / "td1"))
-    t.append(_df(spark, range(0, 10)))        # group A: 0-9
-    t.append(_df(spark, range(100, 110)))     # group B: 100-109
-    t.append(_df(spark, range(200, 210)))     # group C: 200-209
-
-    t.delete_where(F.col("doc_id") < 3)
-    m = t.last_delete_metrics
-    assert (m["groups"], m["probed"], m["pruned"]) == (3, 1, 2)
-    assert {r["doc_id"] for r in t.read().collect()} == (
-        set(range(3, 10)) | set(range(100, 110)) | set(range(200, 210))
-    )
-
-    # compound: the opaque conjunct is ignored, the range still prunes
-    t.delete_where((F.col("doc_id") >= 200) & F.col("text").isNotNull())
-    m = t.last_delete_metrics
-    assert (m["probed"], m["pruned"]) == (1, 2)
-    assert t.read().where(F.col("doc_id") >= 200).count() == 0
-
-    # opaque predicate: full probe fallback, still correct
-    t.delete_where(F.length(F.col("text")) >= 99)
-    m = t.last_delete_metrics
-    assert m["probed"] == m["groups"] and m["pruned"] == 0
-
-
-def test_delete_where_no_candidates_skips_rewrite(spark, tmp_path):
-    """Stats proving zero possible matches: no probe scan, no rewrite —
-    the snapshot's groups are carried by reference unchanged."""
-    t = SnapshotTable(spark, str(tmp_path / "td2"))
-    t.append(_df(spark, range(0, 10)))
-    before = t.manifest(t.current_version())["data_groups"]
-    t.delete_where(F.col("doc_id") > 1000)
-    m = t.last_delete_metrics
-    assert (m["probed"], m["pruned"]) == (0, 1)
-    assert t.manifest(t.current_version())["data_groups"] == before
-    assert t.read().count() == 10
-
-
-def test_delete_where_timestamp_range_prunes(spark, tmp_path):
-    """The canonical crawl-table delete — `warc_ts < cutoff` — must prune
+def test_scan_timestamp_range_prunes(spark, tmp_path):
+    """The canonical crawl-table range — `warc_ts < cutoff` — must prune
     on the string-encoded timestamp stats and open only the old groups."""
     import datetime as dt
 
@@ -749,24 +695,22 @@ def test_delete_where_timestamp_range_prunes(spark, tmp_path):
         ]
         return spark.createDataFrame(rows, "doc_id long, warc_ts timestamp")
 
+    def hit_groups(df):
+        return {f.split("/data/")[1].split("/")[0] for f in df.inputFiles()}
+
     t = SnapshotTable(spark, str(tmp_path / "td3"))
     t.append(ts_df(1, 5))     # group A: Jan 1-4
     t.append(ts_df(10, 15))   # group B: Jan 10-14
     t.append(ts_df(20, 25))   # group C: Jan 20-24
 
-    t.delete_where(F.col("warc_ts") < dt.datetime(2020, 1, 6))
-    m = t.last_delete_metrics
-    assert (m["groups"], m["probed"], m["pruned"]) == (3, 1, 2)
-    left = [r["warc_ts"] for r in t.read().collect()]
-    assert len(left) == 10 and min(left) == dt.datetime(2020, 1, 10, 12)
+    old = t.scan([("warc_ts", None, dt.datetime(2020, 1, 6))])
+    assert len(hit_groups(old)) == 1
+    got = sorted(r["warc_ts"] for r in old.collect())
+    assert len(got) == 4 and max(got) == dt.datetime(2020, 1, 4, 12)
 
-    # scan() binds datetime ranges too (same encoding, read path)
     hits = t.scan([("warc_ts", dt.datetime(2020, 1, 19), None)])
     assert hits.count() == 5
-    hit_groups = {
-        f.split("/data/")[1].split("/")[0] for f in hits.inputFiles()
-    }
-    assert len(hit_groups) == 1
+    assert len(hit_groups(hits)) == 1
 
 
 def test_merge_on_read_delete_vectors(spark, tmp_path):
@@ -811,7 +755,7 @@ def test_merge_on_read_delete_vectors(spark, tmp_path):
 
 
 def test_mor_delete_not_resurrected_by_cow_rewrite(spark, tmp_path):
-    """A copy-on-write rewrite (delete_where / upsert / compact) of a
+    """A copy-on-write rewrite (delete_matching / upsert / compact) of a
     DV-gated group must apply the vector, not resurrect its rows."""
     t = SnapshotTable(spark, str(tmp_path / "mor2"))
     t.append(_df(spark, range(0, 10)))
@@ -820,7 +764,7 @@ def test_mor_delete_not_resurrected_by_cow_rewrite(spark, tmp_path):
         "doc_id",
         merge_on_read=True,
     )
-    t.delete_where(F.col("doc_id") >= 8)  # rewrites the group
+    t.delete_matching(_keys(spark, [8, 9]), "doc_id")  # rewrites the group
     got = {r["doc_id"] for r in t.read().collect()}
     assert got == {0, 1, 2, 5, 6, 7}
     # the rewrite's new group post-dates the DV, so the vector is dead
@@ -904,7 +848,9 @@ def test_rename_column_metadata_only(spark, tmp_path):
     assert (5, "a5") in rows2 and (200, "n200") in rows2
 
     # row-level ops through the mapping: delete on the renamed column
-    t.delete_where(F.col("content") == "a5")
+    t.delete_matching(
+        spark.createDataFrame([("a5",)], "content string"), "content"
+    )
     assert t.read().where(F.col("doc_id") == 5).count() == 0
 
 
@@ -1017,8 +963,7 @@ def test_stats_prune_date_and_string_bounds_on_timestamp(spark, tmp_path):
     """A DATE or string literal against a timestamp column must prune
     CHRONOLOGICALLY: lexicographic comparison of '2024-01-01' against the
     fixed-width '2024-01-01T00:00:00.000000' stat encoding pruned groups
-    containing TRUE rows — delete_where silently left matching rows and
-    scan() missed them."""
+    containing TRUE rows, and scan() missed them."""
     import datetime as dt
 
     t = SnapshotTable(spark, str(tmp_path / "tsenc"))
@@ -1029,9 +974,12 @@ def test_stats_prune_date_and_string_bounds_on_timestamp(spark, tmp_path):
             "doc_id long, warc_ts timestamp",
         )
     )
-    # date literal: Spark casts to midnight timestamp → row 1 matches
-    t.delete_where(F.col("warc_ts") <= F.lit(dt.date(2024, 1, 1)))
-    assert {r["doc_id"] for r in t.read().collect()} == {2}
+    # date bound: Spark casts it to a midnight timestamp → row 1 matches
+    got = t.scan([("warc_ts", None, dt.date(2024, 1, 1))])
+    assert {r["doc_id"] for r in got.collect()} == {1}
+    # date-only string bound: chronological, so the group stays in
+    got = t.scan([("warc_ts", None, "2024-01-01")])
+    assert {r["doc_id"] for r in got.collect()} == {1}
     # string literal bound through scan(): chronological, not lexicographic
     t2 = SnapshotTable(spark, str(tmp_path / "tsenc2"))
     t2.append(
@@ -1050,7 +998,7 @@ def test_stats_prune_date_and_string_bounds_on_timestamp(spark, tmp_path):
 def test_stat_encode_pads_ancient_years(spark, tmp_path):
     """Years < 1000 (a common date-parse artifact in crawl data) must
     encode fixed-width — strftime('%Y') emits '99' unpadded, which broke
-    the lex==chrono invariant and made a retention delete silently skip
+    the lex==chrono invariant and made a stats-pruned range silently skip
     the bogus-ancient rows (round-5 review finding)."""
     import datetime as dt
 
@@ -1075,13 +1023,12 @@ def test_stat_encode_pads_ancient_years(spark, tmp_path):
             [(3, dt.datetime(2025, 1, 1))], "doc_id long, warc_ts timestamp"
         )
     )
-    t.delete_where(F.col("warc_ts") < dt.datetime(2024, 1, 1))
-    assert {r["doc_id"] for r in t.read().collect()} == {3}
-    m = t.last_delete_metrics
-    assert (m["probed"], m["pruned"]) == (1, 1)
+    old = t.scan([("warc_ts", None, dt.datetime(2024, 1, 1))])
+    assert {r["doc_id"] for r in old.collect()} == {1, 2}
+    assert len({f.split("/data/")[1].split("/")[0] for f in old.inputFiles()}) == 1
 
 
-def test_delete_where_string_column_stays_lexicographic(spark, tmp_path):
+def test_scan_string_column_stays_lexicographic(spark, tmp_path):
     """A genuine string column holding space-separated ISO timestamps
     must prune by Spark's LEXICOGRAPHIC order — chronological pruning
     would skip groups whose rows match the predicate, because ' ' sorts
@@ -1099,18 +1046,16 @@ def test_delete_where_string_column_stays_lexicographic(spark, tmp_path):
     )
     # lexicographically '2024-01-02 01:00:00' < '2024-01-02T00:30:00'
     # (' ' < 'T') although it is chronologically LATER — a chrono prune
-    # would silently keep doc 1
-    t.delete_where(F.col("seen") < "2024-01-02T00:30:00")
-    assert {r["doc_id"] for r in t.read().collect()} == {2}
+    # would silently drop doc 1
+    got = t.scan([("seen", None, "2024-01-02T00:30:00")])
+    assert {r["doc_id"] for r in got.collect()} == {1}
 
 
-def test_delete_where_non_utc_session_drops_temporal_bounds(
-    spark, tmp_path
-):
-    """Under a non-UTC session timezone, string bounds the pruner would
-    parse temporally must not prune (Spark casts them in SESSION tz while
-    the stats are UTC-encoded); the delete still runs via the full
-    probe."""
+def test_scan_non_utc_session_keeps_true_rows(spark, tmp_path):
+    """Under a non-UTC session timezone, Spark casts a temporal string
+    bound in the SESSION tz while the stats are UTC-encoded: binding it to
+    the stats pruned a group holding a TRUE row, so scan() returned fewer
+    rows than read().where() — the contract it documents."""
     import datetime as dt
 
     t = SnapshotTable(spark, str(tmp_path / "tzguard"))
@@ -1122,19 +1067,25 @@ def test_delete_where_non_utc_session_drops_temporal_bounds(
     )
     t.append(
         spark.createDataFrame(
-            [(2, dt.datetime(2024, 1, 5, 12))],
+            [(2, dt.datetime(2024, 1, 2, 3))],
             "doc_id long, warc_ts timestamp",
         )
     )
+    b = "2024-01-02T00:00:00.000000"  # 05:00 UTC in New York
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        t.delete_where(F.col("warc_ts") < F.lit("2024-01-02T00:00:00.000000"))
-        m = t.last_delete_metrics
-        assert m["pruned"] == 0  # the guard dropped the string bound
+        got = sorted(
+            r["doc_id"] for r in t.scan([("warc_ts", None, b)]).collect()
+        )
+        want = sorted(
+            r["doc_id"]
+            for r in t.read().where(F.col("warc_ts") <= F.lit(b)).collect()
+        )
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
-    assert {r["doc_id"] for r in t.read().collect()} == {2}
+    assert want == [1, 2]
+    assert got == want
 
 
 def test_delete_matching_timestamp_key_prunes(spark, tmp_path):
